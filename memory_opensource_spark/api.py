@@ -858,10 +858,10 @@ class MemoryEngine:
         # probed rows — PERF.md round-6's "5% re-rank" recipe, applied to the
         # probe set instead of the corpus).  ``pq_rerank`` (build-time knob)
         # and 4*top_k are floors; PQ_RERANK_BUDGET is the hard cap so the
-        # candidate set — which is collected to the driver below — stays
+        # candidate set — which is broadcast to the fetch below — stays
         # genuinely bounded: at corpus scale 5% of the probed rows grows
-        # linearly with N, and an uncapped collect would be a driver OOM the
-        # way an uncapped _collect_matrix is.  Past the cap, raise nprobe
+        # linearly with N, and an uncapped broadcast would be a driver OOM
+        # the way an uncapped _collect_matrix is.  Past the cap, raise nprobe
         # granularity (C grows with N at build time) instead of re-rank.
         rerank = pq_rerank_size(
             getattr(self, "_pq_rerank", 128), top_k,
@@ -877,32 +877,14 @@ class MemoryEngine:
 
             probe = probe_buckets(qvec, self._pq_cents, nprobe)
             rows = rows.filter(F.col(pq_index.BUCKET_COL).isin(probe))
-        if getattr(self, "_pq_fused_fetch", True):
-            # fused serve (round-8): the ADC cut stays a DataFrame and the
-            # fetch semi-joins it as a broadcast — the candidate set is
-            # <= rerank rows BY CONSTRUCTION (TakeOrdered limit), so the
-            # broadcast is bounded like the old driver collect was, but the
-            # cut + fetch now run as ONE job with no py4j round trip and no
-            # per-query plan rebuild from thousands of IN-literals.  Bucket
-            # partition pruning (the coarse IO bound) still applies above;
-            # what's lost is row-group min/max pruning INSIDE the probed
-            # buckets — measured at the 600k probe, the job fusion wins
-            # (PERF.md round-8); flip _pq_fused_fetch for IO-bound deploys
-            # where footer pruning dominates scheduler latency.
-            rows = rows.join(F.broadcast(cand.select("chunk_id")),
-                             "chunk_id", "left_semi")
-            return rows.drop(pq_index.BUCKET_COL)
-        ids = [r.chunk_id for r in cand.select("chunk_id").collect()]
-        if len(ids) <= 1024:
-            # small candidate sets: a literal IN-filter reaches the parquet
-            # scan (footer min/max on the chunk-id-sorted rows table)
-            rows = rows.filter(F.col("chunk_id").isin(ids))
-        else:
-            # large sets: a 10k+-literal In() bloats the plan; a broadcast
-            # semi-join evaluates the same bounded set executor-side
-            ids_df = self.spark.createDataFrame(
-                [(i,) for i in ids], "chunk_id string")
-            rows = rows.join(F.broadcast(ids_df), "chunk_id", "left_semi")
+        # fused serve (round-8): the ADC cut stays a DataFrame and the fetch
+        # semi-joins it as a broadcast — the candidate set is <= rerank rows
+        # BY CONSTRUCTION (TakeOrdered limit), so the broadcast is bounded,
+        # and the cut + fetch run as ONE job with no py4j round trip and no
+        # per-query plan rebuild from thousands of IN-literals.  Bucket
+        # partition pruning (the coarse IO bound) still applies above.
+        rows = rows.join(F.broadcast(cand.select("chunk_id")),
+                         "chunk_id", "left_semi")
         return rows.drop(pq_index.BUCKET_COL)
 
     def search(self, query_text: str, ctx: AclContext | None = None,

@@ -260,12 +260,6 @@ def robots_sitemaps(content: Column) -> Column:
     return F.regexp_extract_all(clean, F.lit(_SITEMAP_RX), 1)
 
 
-def robots_sitemaps_sql(expr: str) -> str:
-    """DuckDB twin of :func:`robots_sitemaps` — same regexes."""
-    return (f"regexp_extract_all(regexp_replace(coalesce({expr}, ''), "
-            f"'(?m)#.*$', '', 'g'), '{_SITEMAP_RX}', 1)")
-
-
 def robots_delays_table(robots: DataFrame, agent: str = "*",
                         host_col: str = "host",
                         content_col: str = "content") -> DataFrame:

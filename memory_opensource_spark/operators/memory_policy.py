@@ -221,15 +221,6 @@ def resolve_memory_policy(schema: Any | None = None,
     return merge_memory_policies(combined_schema_policy, memory_policy)
 
 
-def extract_omo_fields(policy: dict[str, Any]) -> dict[str, Any]:
-    """memory_policy_resolver.py:399-413."""
-    return {
-        "consent": policy.get("consent", DEFAULT_CONSENT),
-        "risk": policy.get("risk", DEFAULT_RISK),
-        "acl": policy.get("acl"),
-    }
-
-
 def should_skip_graph_extraction(policy: dict[str, Any]) -> bool:
     """memory_policy_resolver.py:416-425: consent='none' -> no extraction."""
     return policy.get("consent") == "none"

@@ -190,26 +190,6 @@ def windowed_counts(logs: DataFrame, key_col: str, ts_col: str, days: int,
     )
 
 
-def temporal_coherence(pairs: DataFrame, key_col: str = "memory_id",
-                       age_diff_col: str = "age_diff_hours") -> DataFrame:
-    """R13 (memory/memory_graph.py:4546-4560): vs top-related set, abs age-diff
-    stats and coherence = 1 - spread/(max+1).  The median is the
-    reference's ELEMENT-SELECT form — sorted(diffs)[n//2], the upper-middle
-    element with no interpolation (:4557) — not percentile(0.5)
-    (round-5 mirrored-deviation review: even-cardinality groups differed)."""
-    med = F.element_at(F.sort_array(F.collect_list(age_diff_col)),
-                       (F.floor(F.count(age_diff_col) / 2) + 1).cast("int"))
-    agg = pairs.groupBy(key_col).agg(
-        F.max(age_diff_col).alias("max_diff"),
-        F.min(age_diff_col).alias("min_diff"),
-        med.alias("median_diff"),
-    )
-    spread = F.col("max_diff") - F.col("min_diff")
-    return agg.withColumn("spread", spread).withColumn(
-        "coherence", F.lit(1.0) - F.col("spread") / (F.col("max_diff") + F.lit(1.0))
-    )
-
-
 def trim_content(df: DataFrame, content_col: str = "content",
                  n_chars: int = 600) -> DataFrame:
     """R14 (memory/memory_graph.py:5175-5212): cap content at 600 chars."""

@@ -221,23 +221,3 @@ def schema_merge_nodes(existing: DataFrame, incoming: DataFrame,
     ex, inc = keyed(existing), keyed(incoming)
     kept = ex.join(inc.select(*key_cols).distinct(), key_cols, "left_anti")
     return kept.unionByName(inc).drop(*key_cols)
-
-
-def constraint_for(registry: SchemaRegistry, node_type: str,
-                   prop_cols: dict[str, str] | None = None):
-    """Bridge to the constraints engine: build a NodeConstraint whose key_props
-    and create-mode come from the REGISTERED schema instead of caller args
-    (unique_identifiers -> search keys, resolution_policy -> create;
-    models/user_schemas.py:104-131 maps the same way).  ``prop_cols`` renames
-    schema property names to physical columns (e.g. name -> prop_name)."""
-    from .constraints import NodeConstraint
-
-    nt = registry.node_type(node_type)
-    if nt is None:
-        raise ValueError(f"unregistered node type: {node_type}")
-    remap = prop_cols or {}
-    return NodeConstraint(
-        label=nt.name,
-        key_props=[remap.get(k, k) for k in nt.unique_identifiers],
-        create=nt.resolution_policy,
-    )

@@ -1440,51 +1440,37 @@ def search_flagship(spark, sf_dir):
     return out.select("memory_id", _r6(F.col("score")).alias("score"), "user_id")
 
 
-def denorm_chunks_path(sf_dir: str) -> str:
-    """Materialization path for the denormalized chunk layout (built once per
-    sf, reused across queries/rounds like the persisted IVF index)."""
+def _layout(sf_dir: str, name: str, sources: tuple[str, ...], writer,
+            build: Callable[[str], None]) -> str:
+    """Path of the derived layout ``spark_graft_<name>_<sf>`` under the temp
+    dir, built once by ``build(path)`` and rebuilt when the ``sources``
+    fixtures, the ``writer`` module or this module change
+    (sources/layout.py)."""
     import os
+    import sys
     import tempfile
 
+    from .sources import layout
+
     tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(tempfile.gettempdir(), f"spark_graft_chunks_denorm_{tag}")
-
-
-def _source_fingerprint(sf_dir: str, names: tuple[str, ...]) -> str:
-    """(size, mtime) fingerprint of the source parquet files — guards every
-    /tmp materialization against silent fixture drift (the round-2 incident:
-    regenerated fixtures under the same path invalidated derived state)."""
-    import os
-
-    parts = []
-    for n in names:
-        p = f"{sf_dir.rstrip('/')}/{n}.parquet"
-        st = os.stat(p)
-        parts.append(f"{n}:{st.st_size}:{int(st.st_mtime)}")
-    return "|".join(parts)
+    root = os.path.join(tempfile.gettempdir(), f"spark_graft_{name}_{tag}")
+    key = layout.layout_key(sf_dir, sources, (writer, sys.modules[__name__]))
+    return layout.cached_layout(root, key, build)
 
 
 def load_denorm_chunks(spark, sf_dir):
-    """Read the materialized denormalized chunks, (re)building on first use or
-    when the source fixtures changed (fingerprint sidecar).  Serving queries
+    """Read the materialized denormalized chunks (built once per sf, reused
+    across queries and runs like the persisted IVF index).  Serving queries
     scan THIS parquet, so spec predicates on atomic columns (consent/risk/
     custom scalars) reach PushedFilters."""
-    import os
-
-    path = denorm_chunks_path(sf_dir)
-    fp = _source_fingerprint(sf_dir, ("embeddings", "documents"))
-    fp_file = path + ".fingerprint"
-    fresh = (os.path.exists(os.path.join(path, "_SUCCESS"))
-             and os.path.exists(fp_file)
-             and open(fp_file).read() == fp)
-    if not fresh:
-        den = tables.build_chunks_denormalized(
+    def build(path):
+        tables.build_chunks_denormalized(
             tables.load(spark, sf_dir, "embeddings"),
-            tables.load(spark, sf_dir, "documents"))
-        den.write.mode("overwrite").parquet(path)
-        with open(fp_file, "w") as f:
-            f.write(fp)
-    return spark.read.parquet(path)
+            tables.load(spark, sf_dir, "documents")).write.parquet(path)
+
+    return spark.read.parquet(
+        _layout(sf_dir, "chunks_denorm", ("embeddings", "documents"), tables,
+                build))
 
 
 @_register("search_spec_pushdown", f"""
@@ -2184,24 +2170,13 @@ def ann_ivf_persisted(spark, sf_dir):
     first-8 centroids here so the identical DuckDB oracle grades both paths;
     production trains k-means (train_centroids) the same way.
     """
-    import os
-    import tempfile
-
     from .sources import ann_index
 
     emb = tables.load(spark, sf_dir, "embeddings")
     _cv = _qvecs(sf_dir, list(range(8)))
     cents = [_cv[i] for i in range(8)]
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_ivf_{tag}")
-    fp = _source_fingerprint(sf_dir, ("embeddings",))
-    fp_file = path + ".fingerprint"
-    fresh = (os.path.exists(os.path.join(path, "_SUCCESS"))
-             and os.path.exists(fp_file) and open(fp_file).read() == fp)
-    if not fresh:
-        ann_index.build_ivf_index(emb, path, centroids=cents)
-        with open(fp_file, "w") as f:
-            f.write(fp)
+    path = _layout(sf_dir, "ivf", ("embeddings",), ann_index,
+                   lambda p: ann_index.build_ivf_index(emb, p, centroids=cents))
     out = ann_index.ann_query(spark, path, cents[0], k=10, nprobe=2,
                               centroids=cents, id_col="vec_id")
     return out.select("vec_id", _r6(F.col("score")).alias("score"))
@@ -8486,25 +8461,15 @@ def zorder_roundtrip(spark, sf_dir):
     footer stats prune on BOTH columns (PERF.md round-5 table) — then read
     back through a 2-D range predicate and aggregated.  The oracle computes
     the same aggregate from the RAW table, so any row lost, duplicated, or
-    corrupted by the Morton rewrite hash-fails.  Cached per fixture
-    fingerprint like the ANN layout."""
-    import os
-    import tempfile
-
+    corrupted by the Morton rewrite hash-fails.  Cached layout, like the
+    ANN one."""
     from .sources import writers
 
     ev = tables.load(spark, sf_dir, "events").withColumn(
         "epoch", F.unix_timestamp("ts"))
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_zorder_{tag}")
-    fp = _source_fingerprint(sf_dir, ("events",))
-    fp_file = path + ".fingerprint"
-    fresh = (os.path.exists(os.path.join(path, "_SUCCESS"))
-             and os.path.exists(fp_file) and open(fp_file).read() == fp)
-    if not fresh:
-        writers.zorder_write(ev, path, ["user_id", "epoch"], n_files=16)
-        with open(fp_file, "w") as f:
-            f.write(fp)
+    path = _layout(sf_dir, "zorder", ("events",), writers,
+                   lambda p: writers.zorder_write(ev, p, ["user_id", "epoch"],
+                                                  n_files=16))
     z = spark.read.parquet(path).filter(
         F.col("user_id").between(3, 7)
         & F.col("epoch").between(1704500000, 1705500000))
@@ -8544,25 +8509,14 @@ def txn_merge_roundtrip(spark, sf_dir):
     footer-stats file skipping, and the CURRENT SNAPSHOT is aggregated.  The
     oracle derives the same merged state relationally (anti-join + union),
     so a row lost by the rewrite, a file dropped from the manifest, or a
-    replaced row surviving the anti-join all hash-fail.  Built once per
-    fixture fingerprint; reruns read the committed snapshot."""
-    import os
-    import shutil
-    import tempfile
-
-    from .sources.txn import TxnTable
+    replaced row surviving the anti-join all hash-fail.  Built once as a
+    cached layout; reruns read the committed snapshot."""
+    from .sources import txn
 
     docs = tables.load(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_txn_{tag}")
-    fp = _source_fingerprint(sf_dir, ("documents",))
-    fp_file = path + ".fingerprint"
-    t = TxnTable(spark, path, keys=["doc_id"])
-    fresh = (os.path.exists(fp_file) and open(fp_file).read() == fp
-             and t.current_version() >= 1)
-    if not fresh:
-        shutil.rmtree(path, ignore_errors=True)
-        t = TxnTable(spark, path, keys=["doc_id"])
+
+    def build(path):
+        t = txn.TxnTable(spark, path, keys=["doc_id"])
         t.overwrite(docs.repartitionByRange(8, "doc_id"))
         incoming = (docs.filter(F.col("doc_id") % 7 == 0)
                     .select("doc_id",
@@ -8574,8 +8528,9 @@ def txn_merge_roundtrip(spark, sf_dir):
                                 F.concat(F.lit("NEW:"), F.col("doc_id").cast("string"))
                                 .alias("text"), "source")))
         t.merge(incoming)
-        with open(fp_file, "w") as f:
-            f.write(fp)
+
+    path = _layout(sf_dir, "txn", ("documents",), txn, build)
+    t = txn.TxnTable(spark, path, keys=["doc_id"])
     return t.read().groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.col("text").startswith("PATCHED:").cast("long")).alias("n_patched"),
@@ -8621,25 +8576,15 @@ def ann_ivf_spill(spark, sf_dir):
     partitions, and replicated candidates must be de-duplicated before top-k
     — the oracle's DISTINCT over the rn<=2 bucket join is exactly that
     contract, so a missing dedup (duplicate rows in top-k) or a wrong spill
-    assignment hash-fails.  Layout cached per fixture fingerprint."""
-    import os
-    import tempfile
-
+    assignment hash-fails.  Layout cached."""
     from .sources import ann_index
 
     emb = tables.load(spark, sf_dir, "embeddings")
     _cv = _qvecs(sf_dir, list(range(8)))
     cents = [_cv[i] for i in range(8)]
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_ivf_spill_{tag}")
-    fp = _source_fingerprint(sf_dir, ("embeddings",))
-    fp_file = path + ".fingerprint"
-    fresh = (os.path.exists(os.path.join(path, "_SUCCESS"))
-             and os.path.exists(fp_file) and open(fp_file).read() == fp)
-    if not fresh:
-        ann_index.build_ivf_index(emb, path, centroids=cents, assign_k=2)
-        with open(fp_file, "w") as f:
-            f.write(fp)
+    path = _layout(sf_dir, "ivf_spill", ("embeddings",), ann_index,
+                   lambda p: ann_index.build_ivf_index(emb, p, centroids=cents,
+                                                       assign_k=2))
     out = ann_index.ann_query(spark, path, cents[0], k=10, nprobe=2,
                               id_col="vec_id")
     return out.select("vec_id", _r6(F.col("score")).alias("score"))
@@ -8669,23 +8614,12 @@ def ann_pq_rerank(spark, sf_dir):
     is the EXACT cosine top-10: the row is green only while the lossy ADC
     candidate stage still surfaces every true neighbor on this fixture — a
     broken codebook, encoder, LUT, or candidate cut hash-fails.  Layout
-    cached per fixture fingerprint."""
-    import os
-    import tempfile
-
+    cached."""
     from .sources import pq_index
 
     emb = tables.load(spark, sf_dir, "embeddings")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_pq_{tag}")
-    fp = _source_fingerprint(sf_dir, ("embeddings",))
-    fp_file = path + ".fingerprint"
-    fresh = (os.path.exists(os.path.join(path, "_SUCCESS"))
-             and os.path.exists(fp_file) and open(fp_file).read() == fp)
-    if not fresh:
-        pq_index.build_pq_index(emb, path, m=16)
-        with open(fp_file, "w") as f:
-            f.write(fp)
+    path = _layout(sf_dir, "pq", ("embeddings",), pq_index,
+                   lambda p: pq_index.build_pq_index(emb, p, m=16))
     out = pq_index.pq_query(spark, path, emb, _qvec(sf_dir, 0), k=10,
                             rerank=128, id_col="vec_id")
     return out.select("vec_id", _r6(F.col("score")).alias("score"))
@@ -8792,12 +8726,8 @@ def corpus_increment_dedup_q(spark, sf_dir):
     oracle encodes; the SemDeDup divergence case (new doc ranking before an
     existing member) is pinned by tests/test_corpus.py instead.  The codebook
     is the first 16 vectors by id (deterministic, mirrors
-    dedup_semantic_clusters); state rebuilds on fixture-fingerprint change,
-    and the increment runs with update_state=False so the row is
-    re-runnable."""
-    import os
-    import tempfile
-
+    dedup_semantic_clusters); the state is a cached layout, and the
+    increment runs with update_state=False so the row is re-runnable."""
     from .plans import corpus as corpus_plan
 
     docs = tables.load(spark, sf_dir, "documents")
@@ -8811,26 +8741,21 @@ def corpus_increment_dedup_q(spark, sf_dir):
     docs = docs.join(emb.select("doc_id"), "doc_id", "semi")
     cents = emb_t.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("centroid_id"), "embedding")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    state = os.path.join(tempfile.gettempdir(), f"spark_graft_corpus_{tag}")
-    fp = _source_fingerprint(sf_dir, ("documents", "embeddings"))
-    fp_file = state + ".fingerprint"
-    # the fingerprint file carries the init/new split point too, so a warm
+    # the layout carries the init/new split point in a sidecar too, so a warm
     # call runs zero pre-increment jobs (the max-id scan only runs when the
     # state rebuilds anyway)
-    cut = None
-    if (os.path.exists(os.path.join(state, "members"))
-            and os.path.exists(fp_file)):
-        stored = open(fp_file).read().rsplit("\n", 1)
-        if stored[0] == fp and len(stored) == 2:
-            cut = int(stored[1])
-    if cut is None:
+    def build(path):
         cut = (docs.agg(F.max("doc_id")).first()[0] + 1) * 7 // 10
         corpus_plan.corpus_init(
             docs.filter(F.col("doc_id") < cut).select("doc_id", "text"),
-            emb, cents, state, eps=0.35, jaccard_threshold=0.5)
-        with open(fp_file, "w") as f:
-            f.write(f"{fp}\n{cut}")
+            emb, cents, path, eps=0.35, jaccard_threshold=0.5)
+        with open(path + ".split", "w") as f:
+            f.write(str(cut))
+
+    state = _layout(sf_dir, "corpus", ("documents", "embeddings"),
+                    corpus_plan, build)
+    with open(state + ".split") as f:
+        cut = int(f.read())
     # batch-shaped inputs, like a real caller: the increment's contract takes
     # the BATCH docs + the batch's embeddings (joins would drop the rest
     # anyway, but handing over the full table re-scans embeddings once per
@@ -8858,126 +8783,10 @@ for _k in list(ORACLE):
                   .replace("{MEMS}", MEMORIES_CTE.strip().removeprefix("\n")))
 
 
-# ---------------------------------------------------------------------------------
-# Registry ordering: the driver's correctness gate grades queries in registration
-# order (round-1 evidence: CORRECTNESS_r01.json == the first 50 registrations,
-# verbatim).  Order the registry so its prefix maximizes COMPONENT coverage:
-# flagships and round-1 red rows first (visibly fixed), then every round-2
-# operator, then the components round 1 left driver-unverified, then one anchor
-# per long-green family.  Every query passes the full local sweep at sf0.01 and
-# sf0.1 regardless of position (tools/check.py).
-# ---------------------------------------------------------------------------------
-
-# The 50-slot prefix is packed so every SURVEY §2 component family and every
-# LLM-pipeline op has at least one driver-verified row per round: suites
-# (suites.py) bundle several components into one row; singles cover the rest.
-# Components per slot are listed in each suite's docstring.
-_EVIDENCE_PRIORITY = [
-    # ------------------------------------------------------------------
-    # round-16 rotation (VERDICT r13 item 8; plan written in DEVNOTES.md
-    # at the r15 rotation): the LAST 16 never-driver-checked rows rotate
-    # in, zeroing the never-checked set — every registry row now has (or
-    # gets this round) a driver-green record.  All 16 were re-gated green
-    # at sf0.01 in this session's full 204/204 run before the swap.
-    # Displaced (per the written plan; all stay hash-gated locally at
-    # sf0.01 AND sf0.1 every round):
-    #   * the 9 ex-stale-red rows, driver-green once in r13
-    #     (CORRECTNESS_r13 queries_newly_passing): st8_sliding_window,
-    #     agg_cube_events, st2_session_memories, user_id_validation,
-    #     feedback_confidence_scores, feedback_engagement_rollup,
-    #     msg_batch_triggers, prediction_validation, session_summaries —
-    #     their families keep window coverage via the five incoming
-    #     events/streaming rows below + suite_ranking_formulas;
-    #   * 7 long-tenured holdovers (each driver-green >=2 rounds):
-    #     warc_ingest_roundtrip, sitemap_frontier, link_graph,
-    #     robots_gate, file_type_route, text_fold_punctuation,
-    #     connector_transpose — crawl keeps 6 window rows, text keeps
-    #     quality_classifier/text_lang_id_ngram + 3 incoming text rows.
-    # ------------------------------------------------------------------
-    # 1-2: flagship read paths (R1/R3/R4/R5, F1, F6, V2, V12, G15)
-    "search_flagship", "search_agentic_flagship",
-    # 3-5: storage/sources S3..S15 (S1/S2 fetch stays driver-exercised
-    # inside both flagships' id-fetch stage; S11 hierarchy stays gated
-    # locally and via the PDF extraction row)
-    "suite_storage_lifecycle",    # S3/S4/S5/S7/S8/S13/S14/S15 (real api ops)
-    "suite_graph_sinks",          # S9/S10
-    "pdf_text_extract",           # S11 PDF text-layer extraction (r13)
-    # 6-7: filters/predicates F2..F7 + ACL audit surface
-    "suite_filters",              # F2/F3/F4/F5/F7
-    "acl_audit",                  # F1 ACL audit trail
-    # 8-11: vector/similarity V1..V12
-    "v4_ingest_reuse",            # V4 (+ V1 ingest leg)
-    "v5_bucketed_pairs",          # V5 (scale path)
-    "v7_content_resolution",      # V7 content-based entity resolution
-    "ann_ivf_persisted",          # ANN with persisted pruned layout
-    # 12-15: graph G1..G16 + analytics + multimodal
-    "suite_graph_store",          # G9/G10/G11
-    "graph_pagerank",             # graph analytics: pagerank
-    "graph_triangle_count",       # graph analytics: triangles
-    "mm_media_meta",              # MP4/MP3/WAV container metadata (r12)
-    # 16: ranking/feedback R2..R17
-    "suite_ranking_formulas",     # R8/R9/R10/R11/R13/R14/R15/R16
-    # 17-24: events/streaming + retention (rotate-ins: never checked)
-    "events_in_sessions",         # ST1 sessionization (never checked)
-    "st2_session_analysis",       # ST2 session stats (never checked)
-    "agg_pivot_events",           # pivoted event rollup (never checked)
-    "events_value_quantiles",     # event value quantiles (never checked)
-    "asof_latest_event",          # as-of latest-event join (never checked)
-    "full_outer_counter_merge",   # counter-state merge (never checked)
-    "retention_sweep",            # TTL retention sweep (never checked)
-    "skew_salted_count",          # salted hot-key aggregation (never checked)
-    # 25-28: sampling/mixture (rotate-ins: never checked)
-    "sample_fixed_k",             # exact fixed-k sampler (never checked)
-    "sample_quality_weighted",    # quality-weighted sampler (never checked)
-    "mixture_weights",            # mixture weight computation (never checked)
-    "corpus_profile",             # corpus profiling stats (never checked)
-    # 29-30: incremental corpus
-    "corpus_increment_dedup",     # exact/near/semantic verdicts vs state (r7)
-    "mm_metadata_pruning",        # multimodal metadata pruning (never checked)
-    # 31-34: dedup family
-    "suite_dedup_family",         # exact/fingerprint/simhash/hamming/jaccard/minhash
-    "dedup_keep_best_quality",    # quality-aware duplicate-family keeper (r12)
-    "dedup_repeated_spans",       # intra-doc repeated spans
-    "fuzzy_decontamination",      # doc-level MinHash decon vs eval sets (r14)
-    # 35-40: quality/text (3 rotate-ins: never checked)
-    "quality_classifier",         # NB log-odds learned quality filter (r12)
-    "text_lang_id_ngram",         # char-trigram language ID (r10)
-    "text_tfidf_top_terms",       # TF-IDF top terms (never checked)
-    "text_cms_frequency",         # count-min-sketch frequencies (never checked)
-    "text_collocations_pmi",      # PMI collocation mining (never checked)
-    "f10_map_functions",          # F10 map/scalar fn surface
-    # 41-46: crawl family
-    "robots_sitemap_discovery",   # Sitemap: directives out of robots.txt (r14)
-    "link_anchors",               # anchor-text link extraction (r14)
-    "url_surt_keys",              # SURT sort keys for crawl layouts (r14)
-    "crawl_frontier",             # bounded-round BFS frontier (r14)
-    "crawl_politeness_waves",     # per-host politeness fetch waves (r14)
-    "politeness_crawl_delay",     # Crawl-delay parsed wave caps (r14)
-    # 47-48: PDF deep-decode family (r14-late)
-    "pdf_cmap_text",              # /ToUnicode CMap + /Differences decode (r14)
-    "pdf_ocr_seam",               # scanned-page detection + OCR seam (r14)
-    # 49-50: composition capstone + tokenizer sharding
-    "pipeline_multiformat",       # mixed-format router composition (r14)
-    "shard_bpe_budget",           # trained-BPE tokens -> shard budget (r13)
-]
-
-
 def _register_suites() -> None:
     from . import suites
 
     suites.register(QUERIES, ORACLE)
 
 
-def _reorder_registry() -> None:
-    # tolerate renames: a stale priority name must never break the module
-    prio = [n for n in _EVIDENCE_PRIORITY if n in QUERIES]
-    rest = [n for n in QUERIES if n not in _EVIDENCE_PRIORITY]
-    ordered = prio + rest
-    for d in (QUERIES, ORACLE):
-        items = {n: d[n] for n in ordered if n in d}
-        d.clear()
-        d.update(items)
-
-
 _register_suites()
-_reorder_registry()

@@ -119,7 +119,7 @@ def refine_centroids(df: DataFrame, init_centroids: list[list[float]],
 
     ``tol`` default is 5e-4 (r11, was 1e-4): the per-iteration max
     movement on a CONVERGED codebook floors at the training-sample noise,
-    measured ~2-3e-4 at 600k/C=1200 (tools/refine_iters_probe.py — and
+    measured ~2-3e-4 at 600k/C=1200 (PERF.md "Round-10 recluster" — and
     assignment quality after 1 iteration equals 10 iterations to 4
     decimals there), so a tol below the noise floor never fires and a
     steady-state recluster paid a full extra assign+mean round just to
@@ -181,7 +181,7 @@ def refine_centroids(df: DataFrame, init_centroids: list[list[float]],
             break
         # plateau stop (round-10): on an already-fit codebook the per-iter
         # MAX movement floors at the training-sample noise level (measured
-        # ~2e-4 at 600k/C=1200 — tools/refine_iters_probe.py) and the tol
+        # ~2e-4 at 600k/C=1200 — PERF.md "Round-10 recluster") and the tol
         # above never fires, so a converged warm start used to pay all
         # max_iter rounds.  Lloyd's progress decays geometrically; a move
         # that fails to halve is the noise floor, not progress (quality

@@ -80,6 +80,10 @@ def _footer_schema(path: str):
             return None
         path = path[len("file://"):]
     try:
+        # taken out up front and put back only on a hit or a fresh read, so
+        # a path that now returns None (emptied, grown past 32 files,
+        # drifted, gone) leaves no stale entry behind
+        hit = _SCHEMA_CACHE.pop(path, None)
         targets = [path]
         if os.path.isdir(path):
             files = sorted(f for f in os.listdir(path)
@@ -99,8 +103,8 @@ def _footer_schema(path: str):
             return None
         else:
             mtime = os.path.getmtime(path)
-        hit = _SCHEMA_CACHE.get(path)
         if hit is not None and hit[0] == mtime:
+            _SCHEMA_CACHE[path] = hit
             return hit[1]
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
@@ -168,10 +172,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if sch is not None:
         return spark.read.schema(sch).parquet(path)
     return spark.read.parquet(path)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in ALL_TABLES}
 
 
 def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
@@ -397,15 +397,3 @@ def build_edges(customer: DataFrame, nation: DataFrame, supplier: DataFrame) -> 
         F.lit("WORKS_AT").alias("rel_type"),
     )
     return c_n.unionByName(n_r).unionByName(s_n)
-
-
-def build_domain(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All derived memory-domain tables for a scale-factor directory."""
-    t = load_all(spark, sf_dir)
-    return {
-        "memories": build_memories(t["documents"]),
-        "chunks": build_chunks(t["embeddings"]),
-        "nodes": build_nodes(t["customer"], t["nation"], t["region"], t["supplier"]),
-        "edges": build_edges(t["customer"], t["nation"], t["supplier"]),
-        **t,
-    }

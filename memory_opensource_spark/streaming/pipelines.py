@@ -13,8 +13,6 @@ transformations are source-agnostic.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -130,17 +128,6 @@ def _warn_unbounded_horizon(fn_name: str, batch_id: int,
         f"(events re-delivered more than N batches after first ingest would "
         f"then re-append; pick N above the source's re-delivery window).",
         RuntimeWarning, stacklevel=3)
-
-
-def foreach_batch_ingest(stream: DataFrame, sink: Callable[[DataFrame, int], None],
-                         checkpoint: str):
-    """ST1: micro-batch ingest driving the §3.2 pipeline; batch-id = epoch id
-    (memory/memory_graph.py:363-456 queue semantics)."""
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
 
 
 class BatchCompletionListener:

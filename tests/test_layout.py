@@ -1,5 +1,7 @@
 """Physical-layout tests: partition pruning evidence, upserts, skew salting."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -536,3 +538,55 @@ def test_shard_balanced_load_even_token_totals(spark):
     again = {r["doc_id"]: r["shard"]
              for r in writers.shard_balanced_load(df, 8).collect()}
     assert all(again[r["doc_id"]] == r["shard"] for r in out)
+
+
+def test_cached_layout_rebuilds_on_stale_or_missing_key(tmp_path):
+    """Spark-free: a cached derived layout is served while its key matches
+    and rebuilt (built off to the side, then renamed into place) when the
+    key changes or the key file is missing; a failed build keeps the old
+    layout; a writer-module change changes the key."""
+    import types
+
+    from memory_opensource_spark.sources import layout
+
+    root = str(tmp_path / "lay")
+    built = []
+
+    def build(path):
+        assert not path.startswith(root + os.sep)  # never the live dir
+        built.append(path)
+        os.makedirs(path)
+        with open(os.path.join(path, "v"), "w") as f:
+            f.write(str(len(built)))
+
+    def version(data):
+        with open(os.path.join(data, "v")) as f:
+            return f.read()
+
+    data = layout.cached_layout(root, "k1", build)
+    assert data == os.path.join(root, "data") and version(data) == "1"
+    assert layout.cached_layout(root, "k1", build) == data and len(built) == 1
+    layout.cached_layout(root, "k2", build)
+    assert version(data) == "2"
+    os.remove(os.path.join(root, layout.KEY_FILE))
+    layout.cached_layout(root, "k2", build)
+    assert version(data) == "3"
+
+    def broken(path):
+        raise RuntimeError("writer failed")
+
+    with pytest.raises(RuntimeError):
+        layout.cached_layout(root, "k3", broken)
+    assert version(data) == "3"
+    assert os.listdir(tmp_path) == ["lay"]  # no staging or stale dirs left
+
+    (tmp_path / "sf").mkdir()
+    (tmp_path / "sf" / "docs.parquet").write_bytes(b"x")
+    mods = []
+    for i in range(2):
+        src = tmp_path / f"writer{i}.py"
+        src.write_text(f"VERSION = {i}\n")
+        mods.append(types.SimpleNamespace(__file__=str(src)))
+    keys = [layout.layout_key(str(tmp_path / "sf"), ("docs",), (m,))
+            for m in mods]
+    assert keys[0] != keys[1]

@@ -12,71 +12,6 @@ def _components(df):
     return {r[0] for r in df.select("component").distinct().collect()}
 
 
-def test_registry_prefix_covers_component_families():
-    """The driver verifies the first 50 registrations; that prefix must keep
-    one row per component family (the whole point of the suites).
-
-    round-16 rotation (VERDICT r13 item 8): the last 16 never-driver-checked
-    rows rotate in, zeroing the never-checked set; displaced are the 9
-    ex-stale-red rows (driver-green once in r13) and 7 long-tenured
-    holdovers (full displacement rationale in queries._EVIDENCE_PRIORITY).
-    The required list below IS the window: any drift between the curated
-    prefix and this pin is a bug.
-    """
-    from memory_opensource_spark.queries import QUERIES
-
-    top50 = list(QUERIES)[:50]
-    required = [
-        # flagships
-        "search_flagship", "search_agentic_flagship",
-        # storage/sources
-        "suite_storage_lifecycle", "suite_graph_sinks", "pdf_text_extract",
-        # filters/ACL
-        "suite_filters", "acl_audit",
-        # vector/similarity
-        "v4_ingest_reuse", "v5_bucketed_pairs", "v7_content_resolution",
-        "ann_ivf_persisted",
-        # graph + analytics + multimodal
-        "suite_graph_store", "graph_pagerank", "graph_triangle_count",
-        "mm_media_meta",
-        # ranking/feedback
-        "suite_ranking_formulas",
-        # events/streaming + retention (round-16 rotate-ins)
-        "events_in_sessions", "st2_session_analysis", "agg_pivot_events",
-        "events_value_quantiles", "asof_latest_event",
-        "full_outer_counter_merge", "retention_sweep", "skew_salted_count",
-        # sampling/mixture (round-16 rotate-ins)
-        "sample_fixed_k", "sample_quality_weighted", "mixture_weights",
-        "corpus_profile",
-        # incremental corpus + multimodal pruning
-        "corpus_increment_dedup", "mm_metadata_pruning",
-        # dedup family
-        "suite_dedup_family", "dedup_keep_best_quality",
-        "dedup_repeated_spans", "fuzzy_decontamination",
-        # quality/text (3 round-16 rotate-ins)
-        "quality_classifier", "text_lang_id_ngram", "text_tfidf_top_terms",
-        "text_cms_frequency", "text_collocations_pmi", "f10_map_functions",
-        # crawl family
-        "robots_sitemap_discovery", "link_anchors", "url_surt_keys",
-        "crawl_frontier", "crawl_politeness_waves", "politeness_crawl_delay",
-        # PDF deep-decode
-        "pdf_cmap_text", "pdf_ocr_seam",
-        # composition capstone + tokenizer sharding
-        "pipeline_multiformat", "shard_bpe_budget",
-    ]
-    missing = [q for q in required if q not in top50]
-    assert not missing, f"top-50 evidence window lost: {missing}"
-    # the priority list must stay EXACTLY 50 resolvable names — shorter and
-    # arbitrary below-fold rows drift up into the driver window; a stale
-    # name would silently shrink the curated prefix
-    from memory_opensource_spark.queries import _EVIDENCE_PRIORITY
-
-    assert len(_EVIDENCE_PRIORITY) == 50
-    assert len(required) == 50 and set(required) == set(_EVIDENCE_PRIORITY)
-    stale = [n for n in _EVIDENCE_PRIORITY if n not in QUERIES]
-    assert not stale, f"stale priority names: {stale}"
-
-
 def test_suite_filters_components(spark):
     from memory_opensource_spark.queries import QUERIES
 

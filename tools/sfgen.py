@@ -52,18 +52,17 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _caesar_table(r: int):
-    if r % 26 == 0:
-        return None
-    k = r % 26
+    # r in 1..25 (main caps --mult at 26): rotation 26 is the identity and
+    # would give that replica replica 0's text byte for byte
     lo = "abcdefghijklmnopqrstuvwxyz"
     hi = lo.upper()
-    return str.maketrans(lo + hi, lo[k:] + lo[:k] + hi[k:] + hi[:k])
+    return str.maketrans(lo + hi, lo[r:] + lo[:r] + hi[r:] + hi[:r])
 
 
 def _shift(col: pa.ChunkedArray, delta: int) -> pa.Array:
     import pyarrow.compute as pc
 
-    return pc.add(col, pa.scalar(delta, type=col.type)).combine_chunks()
+    return pc.add_checked(col, pa.scalar(delta, type=col.type)).combine_chunks()
 
 
 def main() -> None:
@@ -75,6 +74,9 @@ def main() -> None:
         i = args.index("--src"); src = args[i + 1]; del args[i:i + 2]
     if "--out" in args:
         i = args.index("--out"); out = args[i + 1]; del args[i:i + 2]
+    if not 1 <= mult <= 26:
+        sys.exit(f"--mult {mult}: must be 1..26 (the per-replica Caesar "
+                 f"rotation repeats every 26 replicas)")
     if out is None:
         src_sf = float(src.rstrip("/").rsplit("sf", 1)[-1])
         label = src_sf * mult
@@ -139,7 +141,7 @@ def main() -> None:
                 key = shifts.get(name, {}).get(field)
                 if key is not None:
                     cols.append(_shift(col, r * base[key]))
-                elif name == "documents" and field == "text" and r % 26:
+                elif name == "documents" and field == "text" and r:
                     tbl = _caesar_table(r)
                     cols.append(pa.array(
                         [s.translate(tbl) if s is not None else None
